@@ -20,8 +20,20 @@ MAX_WORK_FACTOR = 3
 _C14N = re.compile(r"c14n(0|[1-9][0-9]*)\Z")
 
 
-def expected_pages(docs):
-    """url -> (nquads, label_map) for every web page."""
+def expected_pages(docs, processes=1):
+    """url -> (nquads, label_map) for every web page, computed in
+    ``processes`` forked worker processes, stopped before it returns."""
+    if processes > 1:
+        import multiprocessing
+
+        pool = multiprocessing.get_context("fork").Pool(processes)
+        try:
+            parts = pool.map(expected_pages,
+                             [docs[i::processes] for i in range(processes)])
+        finally:
+            pool.close()
+            pool.join()
+        return {url: v for part in parts for url, v in part.items()}
     out = {}
     for doc in docs:
         id_map = {}

@@ -1,6 +1,6 @@
 """Run one benchmark workload and print one JSON result line.
 
-    python3 perfbench/run.py --workload web_pages --seed 1 --seconds 10 \
+    python3 perfbench/run.py --workload web_pages --seed 1 --seconds 30 \
         --trace 0
 
 Inputs are generated from ``--seed``; outputs are checked against
@@ -30,11 +30,14 @@ HERE = os.path.dirname(os.path.abspath(__file__))
 REPO = os.path.dirname(HERE)
 OUT_ROOT = os.path.join(REPO, ".perfbench")
 
-# nproc-slot jobs timed after each one-slot job
-NPROC_JOBS_PER_CYCLE = 3
-# repetitions of each prefix (and scenario job) in the traced run
-TRACE_REPS = 2
-SCENARIO_REPS = 1
+# timed cycles per run: at least this many, more while a whole further
+# cycle fits into --seconds
+MIN_CYCLES = 2
+# repetitions of each plan prefix in the traced run; the whole job (the
+# last prefix) and the untraced reference run this often too
+TRACE_REPS = 3
+# the per-layer metrics only the resume scenario of web_pages has: every
+# traced run reports every per-layer metric, so the others report 0
 MATERIALIZE_METRICS = (
     ("materialize.resume_s", "s"), ("materialize.write_s", "s"),
     ("materialize.derive_s", "s"), ("materialize.wall_s", "s"),
@@ -92,15 +95,24 @@ def host_steal_s():
     return int(fields[8]) / os.sysconf("SC_CLK_TCK")
 
 
+def scaling_ratios(cycles, nproc):
+    """``cycles``: ``(one-slot wall, nproc-slot wall, nproc-slot wall)``
+    each.  Per cycle, the one-slot wall over nproc times the mean of the
+    two nproc-slot walls after it: a host slowdown that lasts a cycle
+    slows both sides of the ratio."""
+    return [w1 / (nproc * (a + b) / 2) for w1, a, b in cycles]
+
+
 def untraced_run(wl, args, work, report):
     """End-to-end metrics.  A cold ``local[nproc]`` session is timed from
     process start to the end of its warm-up job (input generation and
-    expected outputs excluded).  After one untimed job, cycles of one
-    job with one task slot and three with nproc slots, until
-    ``--seconds`` pass, at least one.  The one-slot job runs while
-    ``nproc - 1`` task slots are held, which schedules it as
-    ``local[1]`` would, on the same warmed JVM and Python workers;
-    interleaving the legs lets a host slowdown hit both."""
+    expected outputs excluded).  Then cycles of three jobs: one slot,
+    nproc slots, nproc slots; at least ``MIN_CYCLES``, more while a
+    whole further cycle fits into ``--seconds``.  The one-slot job runs
+    while ``nproc - 1`` task slots are held, which schedules it as
+    ``local[1]`` would, on the same JVM and Python workers; it comes
+    first since the JIT still compiles during the first jobs after
+    start-up, on the cores it leaves idle."""
     from perfbench import sparkenv
 
     nproc = os.cpu_count() or 1
@@ -109,32 +121,33 @@ def untraced_run(wl, args, work, report):
     report["prepare_s"] = time.time() - t
 
     spark = sparkenv.start_session("local[%d]" % nproc, work, wl.partitions)
+    phases = {"session_started": time.time() - PROCESS_START}
     # warm-up: the first plan, Python workers spun up; its output is the
     # one the run checks
     rows = wl.output(spark)
     setup_s = time.time() - PROCESS_START - report["prepare_s"]
     attempted, bad = wl.verify(rows)
     report["host"] = host_info(spark)
-    phases = {"setup_end": setup_s + report["prepare_s"]}
-    wl.job(spark)  # untimed: the first jobs after start-up still run slow
+    phases["setup_end"] = setup_s + report["prepare_s"]
 
-    walls_n, walls_1, rss_mb = [], [], []
+    cycles, rss_mb = [], []
 
-    def one(walls, slots_held):
+    def one(slots_held):
         with sparkenv.SlotHold(spark, slots_held, work):
             rss.lap()
-            walls.append(timed_job(wl, spark))
+            wall = timed_job(wl, spark)
             rss_mb.append(rss.lap())
+        return wall
 
-    deadline = time.perf_counter() + args.seconds
     steal = host_steal_s()
+    start = time.perf_counter()
     with sparkenv.RssSampler() as rss:
-        while not walls_1 or time.perf_counter() < deadline:
-            # the long one-slot job first: the nproc-slot jobs after it
-            # run on a JIT it has warmed further
-            one(walls_1, nproc - 1)
-            for _ in range(NPROC_JOBS_PER_CYCLE):
-                one(walls_n, 0)
+        while True:
+            cycles.append((one(nproc - 1), one(0), one(0)))
+            spent = time.perf_counter() - start
+            if (len(cycles) >= MIN_CYCLES
+                    and spent * (len(cycles) + 1) / len(cycles) > args.seconds):
+                break
     report["host_steal_s"] = host_steal_s() - steal
     phases["timed_end"] = time.time() - PROCESS_START
     spark.stop()
@@ -142,63 +155,85 @@ def untraced_run(wl, args, work, report):
     phases["stopped"] = time.time() - PROCESS_START
     report["phases_s"] = phases
 
+    walls_n = [w for _, a, b in cycles for w in (a, b)]
     wall = median(walls_n)
-    report.update(walls_nproc=walls_n, walls_1=walls_1, rss_mb=rss_mb)
+    report.update(cycles=cycles, rss_mb=rss_mb)
     return attempted, bad, {
         "setup_s": _metric(setup_s, "s"),
         "wall_s": _metric(wall, "s"),
         "quads_per_s": _metric(wl.n_quads / wall, "quads/s"),
-        "scaling_eff": _metric(median(walls_1) / (nproc * wall), "ratio"),
+        "scaling_eff": _metric(median(scaling_ratios(cycles, nproc)),
+                               "ratio"),
         # the median job's peak: one job's high-water mark, steadier
         # than the maximum over however many jobs the run fitted in
         "peak_rss_mb": _metric(median(rss_mb), "MiB"),
     }
 
 
-def trace_jobs(wl, spark, spans, reps, tag, whole_job):
-    """Force every plan prefix ``reps`` times, then (``whole_job``) run
-    the job's steps as often, under spans with a Spark job description
-    ``<tag>:<key>#<rep>``.
-    Returns wall and CPU (JVM + Python workers) seconds per key, and
-    the prefix layers in plan order."""
-    from perfbench import sparkenv, tracing
-    from perfbench.workloads import noop
+class Recorder:
+    """Runs blocks under a span and the Spark job description
+    ``<tag>:<key>#<rep>``, keeping each key's wall and CPU seconds (JVM
+    and Python workers, from /proc)."""
 
-    sc = spark.sparkContext
-    pids = sparkenv.descendants(os.getpid())
-    walls, cpu = {}, {}
+    def __init__(self, spark, spans, tag):
+        from perfbench import sparkenv
 
-    def record(key, rep, fn):
-        sc.setJobDescription("%s:%s#%d" % (tag, key, rep))
-        c0 = tracing.process_cpu_s(pids)
-        with spans.span(tag + "." + key) as s:
-            fn()
-        walls.setdefault(key, []).append(s["end"] - s["start"])
-        cpu.setdefault(key, []).append(tracing.process_cpu_s(pids) - c0)
+        self.sc, self.spans, self.tag = spark.sparkContext, spans, tag
+        self.pids = sparkenv.descendants(os.getpid())
+        self.walls, self.cpu = {}, {}
 
-    prefixes = wl.prefixes(spark)
-    for rep in range(reps):
-        for layer, build in prefixes:
-            wl.reset()
-            # planned inside the span, as the job plans inside its own,
-            # and after the reset: a plan lists its input files
-            record(layer, rep, lambda: noop(build()))
-    for rep in range(reps if whole_job else 0):
-        wl.reset()
-        with spans.span(tag + ".job") as s:
-            for step, fn in wl.steps(spark):
-                record("step." + step, rep, fn)
-        walls.setdefault("job", []).append(s["end"] - s["start"])
-    return walls, cpu, [layer for layer, _ in prefixes]
+    def __call__(self, key, rep, fn):
+        from perfbench import tracing
+
+        self.sc.setJobDescription("%s:%s#%d" % (self.tag, key, rep))
+        c0 = tracing.process_cpu_s(self.pids)
+        with self.spans.span(self.tag + "." + key) as s:
+            out = fn()
+        self.walls.setdefault(key, []).append(s["end"] - s["start"])
+        self.cpu.setdefault(key, []).append(
+            tracing.process_cpu_s(self.pids) - c0)
+        self.sc.setJobDescription(None)
+        return out
+
+    def prefixes(self, wl, spark, reps):
+        """Force every plan prefix of ``wl`` ``reps`` times; the prefix
+        layers in plan order."""
+        from perfbench.workloads import noop
+
+        prefixes = wl.prefixes(spark)
+        for rep in range(reps):
+            for layer, build in prefixes:
+                wl.reset()
+                # planned inside the span, as the job plans inside its
+                # own, and after the reset: a plan lists its input files
+                self(layer, rep, lambda: noop(build()))
+        return [layer for layer, _ in prefixes]
+
+
+def trace_resume(rw, spark, spans):
+    """The resume scenario: its prefixes once, then one whole job
+    (write, then derive), whose commit is checked."""
+    rec = Recorder(spark, spans, rw.name)
+    rec.prefixes(rw, spark, 1)
+    rw.reset()
+    with spans.span(rw.name + ".job") as s:
+        frames = rec("write", 0, lambda: rw.write(spark))
+        rec("derive", 0, lambda: rw.derive(frames))
+    rec.walls["job"] = [s["end"] - s["start"]]
+    spark.sparkContext.setJobDescription("check")
+    attempted, bad = rw.check(spark)
+    return rec.walls, rw.materialized(), attempted, bad
 
 
 def traced_run(wl, args, work, report):
     """Per-layer metrics.  Spark layers: successive plan prefixes
     forced with a ``noop`` sink, with Spark's event log on.  Kernel
-    layers: a driver replay of a stratified document sample.  Traced
-    scenarios (the resume-and-write path) run in the same session."""
+    layers: a driver replay of a stratified document sample.  With
+    ``web_pages``, the resume-and-write scenario runs in the same
+    session."""
     from perfbench import sparkenv, tracing
     from perfbench.checks import MAX_WORK_FACTOR
+    from perfbench.workloads import ResumeWrite
 
     nproc = os.cpu_count() or 1
     master = "local[%d]" % nproc
@@ -207,20 +242,30 @@ def traced_run(wl, args, work, report):
     shutil.rmtree(trace_dir, ignore_errors=True)
     event_log = os.path.join(trace_dir, "eventlog")
     spans = tracing.Spans("%s-seed%d-%d" % (wl.name, args.seed, os.getpid()))
-    scenarios = [cls(args.seed, REPO, os.path.join(work, cls.name), nproc)
-                 for cls in wl.traced_scenarios]
+    rw = None
+    if wl.name == "web_pages":
+        rw = ResumeWrite(args.seed, REPO, os.path.join(work, ResumeWrite.name),
+                         nproc)
 
     with spans.span("prepare"):
-        for w in [wl] + scenarios:
-            w.prepare()
+        wl.prepare()
+        if rw:
+            rw.prepare()
 
     spark = sparkenv.start_session(master, work, wl.partitions,
                                    event_log_dir=event_log)
     report["host"] = host_info(spark)
     wl.job(spark)  # warm-up, not traced
+    rec = Recorder(spark, spans, wl.name)
+    # whole jobs right after the warm-up, as the untraced reference
+    # below times them, so that trace.overhead_frac compares jobs of
+    # equally warm sessions
+    for rep in range(TRACE_REPS):
+        wl.reset()
+        rec("job", rep, lambda: wl.job(spark))
     # the workload's job is its last prefix, the canonical frame forced
-    walls, cpu, chain = trace_jobs(wl, spark, spans, TRACE_REPS, wl.name,
-                                   whole_job=False)
+    chain = rec.prefixes(wl, spark, TRACE_REPS)
+    walls, cpu = rec.walls, rec.cpu
     spark.sparkContext.setJobDescription("check")  # not a traced job's
     attempted, bad = wl.check(spark)
     counts = {}
@@ -228,20 +273,14 @@ def traced_run(wl, args, work, report):
         if layer in ("pages", "link"):
             df = build()
             counts[layer] = (df.count(), df.rdd.getNumPartitions())
-    scenario_walls = {}
-    for sc_wl in scenarios:
+    if rw:
         # no warm-up: the session is warm from the workload's own jobs
-        scenario_walls[sc_wl.name] = trace_jobs(
-            sc_wl, spark, spans, SCENARIO_REPS, sc_wl.name, whole_job=True)[0]
-        # the last thing trace_jobs ran is a whole job: check its commit
-        n, sc_bad = sc_wl.check(spark)
+        rw_walls, materialized, n, rw_bad = trace_resume(rw, spark, spans)
         attempted += n
-        bad += sc_bad
-        scenario_walls[sc_wl.name]["materialized"] = sc_wl.materialized()
+        bad += rw_bad
     spark.stop()
 
-    # the untraced reference: same settings, no event log, no spans;
-    # it runs last so both sides are measured on a warmed-up JVM
+    # the untraced reference: same settings, no event log, no spans
     spark = sparkenv.start_session(master, work, wl.partitions)
     wl.job(spark)
     untraced = [timed_job(wl, spark) for _ in range(TRACE_REPS)]
@@ -276,7 +315,6 @@ def traced_run(wl, args, work, report):
     pred = {layer: (chain[i - 1] if i else None)
             for i, layer in enumerate(chain)}
     pred["transport"] = pred["canon"] = "sort"
-    wall_untraced = median(untraced)
     doc_ms = [d["doc_ms"] for d in docs]
     weights = [d["weight"] for d in docs]
     p99 = tracing.weighted_quantile(doc_ms, weights, 0.99)
@@ -312,6 +350,12 @@ def traced_run(wl, args, work, report):
         "kernel.doc_ms.p99": (p99, "ms"),
         "kernel.doc_ms.samples": (len(docs), "count"),
         "kernel.doc_ms.beyond_p99": (sum(x > p99 for x in doc_ms), "count"),
+        # the whole per-document kernel, summed over the input (weighted
+        # estimate) and spread over nproc slots, as a share of the
+        # untraced job: how far a kernel change can move wall_s
+        "kernel.wall_share": (
+            sum(w * x for w, x in zip(weights, doc_ms)) / 1e3
+            / (nproc * median(untraced)), "ratio"),
     }
     for i, (population, sampled, _) in enumerate(strata):
         m["kernel.stratum%d.docs" % i] = (population, "count")
@@ -321,42 +365,43 @@ def traced_run(wl, args, work, report):
     for key, unit in tracing.RDFC_COUNTERS:
         m["rdfc." + key] = (rdfc[key], unit)
 
-    rw = scenario_walls.get("resume_write")
     if rw:
-        rw_full = stats("resume_write", "step.write", SCENARIO_REPS)
-        rw_derive = stats("resume_write", "step.derive", SCENARIO_REPS)
-        mat = rw["materialized"]
+        # the write step evaluates the remainder's canonical frame
+        # inside write_batch; derive re-plans the frames it returns
+        evals = stats(rw.name, "write", 1) + stats(rw.name, "derive", 1)
         m.update({
-            "materialize.resume_s": (diff(rw, "resume", "pages"), "s"),
-            # the write step evaluates the canonical frame inside it
+            "materialize.resume_s": (diff(rw_walls, "resume", "pages"), "s"),
             "materialize.write_s": (
-                median(rw["step.write"]) - median(rw["canon"]), "s"),
-            "materialize.derive_s": (median(rw["step.derive"]), "s"),
-            "materialize.wall_s": (median(rw["job"]), "s"),
-            "materialize.kernel_evals": (median(
-                [a["kernel_stages"] + b["kernel_stages"]
-                 for a, b in zip(rw_full, rw_derive)]), "count"),
-            "materialize.bytes": (mat["bytes"], "bytes"),
-            "materialize.files": (mat["files"], "count"),
-            "materialize.manifest_rows": (mat["manifest_rows"], "count"),
+                rw_walls["write"][0] - rw_walls["canon"][0], "s"),
+            "materialize.derive_s": (rw_walls["derive"][0], "s"),
+            "materialize.wall_s": (rw_walls["job"][0], "s"),
+            "materialize.kernel_evals": (
+                sum(e["kernel_stages"] for e in evals), "count"),
+            "materialize.bytes": (materialized["bytes"], "bytes"),
+            "materialize.files": (materialized["files"], "count"),
+            "materialize.manifest_rows": (
+                materialized["manifest_rows"], "count"),
         })
+        report["resume_write"] = dict(walls=rw_walls, **materialized)
     else:
         m.update({k: (0, u) for k, u in MATERIALIZE_METRICS})
+    # each traced job's own wall time against its own stages (event
+    # log): pages, link, sort and the kernel share Spark stages, so the
+    # rest is driver-side planning, job submission and result handling
+    unattributed = [
+        1 - tracing.covered_s(stage_spans.get(
+            "%s:job#%d" % (wl.name, r), [])) / wall
+        for r, wall in enumerate(walls["job"])]
     m.update({
         "failed_frac": (len({u for u, _ in bad}) / max(attempted, 1),
                         "ratio"),
-        "trace.overhead_frac": (median(walls["canon"]) / wall_untraced - 1,
-                                "ratio"),
-        # pages, link, sort and the kernel share Spark stages, so what
-        # covers the job is its stages' execution (event log); the rest
-        # is driver-side planning and scheduling
-        "trace.unattributed_frac": ((wall_untraced - median([
-            tracing.covered_s(stage_spans.get("%s:canon#%d" % (wl.name, r), []))
-            for r in range(TRACE_REPS)])) / wall_untraced, "ratio"),
+        "trace.overhead_frac": (
+            median(walls["job"]) / median(untraced) - 1, "ratio"),
+        "trace.unattributed_frac": (median(unattributed), "ratio"),
     })
     m = {k: _metric(v, u) for k, (v, u) in m.items()}
     report.update(untraced_walls=untraced, walls=walls, cpu=cpu,
-                  scenarios=scenario_walls, strata=strata)
+                  unattributed=unattributed, strata=strata)
     spans.dump(os.path.join(trace_dir, "spans.json"),
                {"metrics": m, "report": report})
     return attempted, bad, m

@@ -15,7 +15,10 @@ import threading
 import time
 
 # The session factory's default (8g) sizes a cluster driver; the inputs
-# here are small and the machine may be shared.
+# here are small and the machine may be shared.  The heap is committed
+# and touched whole at start-up (-Xms, AlwaysPreTouch): left to grow,
+# G1 sizes it differently from run to run, and peak_rss_mb would follow
+# that rather than the program's memory.
 DRIVER_MEMORY = "1g"
 LOG_LEVEL = "ERROR"
 
@@ -47,7 +50,8 @@ def session_conf(work, shuffle_partitions, event_log_dir=None):
     conf = {
         "spark.driver.memory": DRIVER_MEMORY,
         "spark.driver.extraJavaOptions":
-            "-Djava.io.tmpdir=%s -XX:-UsePerfData" % tmp,
+            "-Djava.io.tmpdir=%s -XX:-UsePerfData -Xms%s -XX:+AlwaysPreTouch"
+            % (tmp, DRIVER_MEMORY),
         "spark.local.dir": os.path.join(work, "local"),
         "spark.sql.warehouse.dir": os.path.join(work, "warehouse"),
         "spark.ui.showConsoleProgress": "false",

@@ -37,6 +37,11 @@ def web():
     return docs, checks.expected_pages(docs)
 
 
+def test_expected_pages_in_worker_processes_match(web):
+    docs, expected = web
+    assert checks.expected_pages(docs, 2) == expected
+
+
 @pytest.fixture(scope="module")
 def dense():
     return inputs.dense_documents(7, REPO, 2)
@@ -308,3 +313,29 @@ def test_input_files_keep_documents_whole(tmp_path):
 def test_covered_time_is_the_union_of_intervals():
     assert tracing.covered_s([(0, 2), (1, 3), (5, 6)]) == 4
     assert tracing.covered_s([]) == 0
+
+
+def test_small_strata_are_timed_up_to_min_timed_samples():
+    rows = {"u%04d" % i: [()] * (1 + i % 15) for i in range(1000)}
+    rows.update({"tail%02d" % i: [()] * 1500 for i in range(20)})
+    _, timings, sizes = tracing.stratified_sample(rows, 1)
+    assert sizes[0] == (1000, tracing.STRATUM_QUOTA, tracing.STRATUM_QUOTA)
+    assert sizes[-1] == (20, 20, tracing.MIN_TIMED)
+
+
+# --- the timed loop and the workload table -----------------------------
+
+def test_scaling_ratio_pairs_each_one_slot_job_with_its_cycle():
+    from perfbench.run import scaling_ratios
+
+    # perfect scaling on 4 slots, then a cycle the host slowed by half
+    assert scaling_ratios([(4.0, 1.0, 1.0), (6.0, 1.5, 1.5)], 4) == [
+        1.0, 1.0]
+    assert scaling_ratios([(4.0, 2.0, 2.0)], 4) == [0.5]
+
+
+def test_resume_write_is_traced_with_web_pages_not_timed():
+    from perfbench.workloads import WORKLOADS, ResumeWrite, WebPages
+
+    assert sorted(WORKLOADS) == ["bnode_dense", "web_pages"]
+    assert issubclass(ResumeWrite, WebPages)

@@ -157,9 +157,11 @@ def stage_stats(stages):
 
 # documents by kernel input rows; the last stratum holds the tail
 STRATA = [(1, 15), (16, 40), (41, 199), (200, None)]
-# timing samples per stratum; a stratum with fewer documents times each
-# of them up to MAX_REPEATS times, so tail documents get enough samples
+# documents sampled per stratum; a stratum with fewer than MIN_TIMED
+# sampled documents times each of them up to MAX_REPEATS times, so the
+# tail gets enough timing samples
 STRATUM_QUOTA = 400
+MIN_TIMED = 40
 MAX_REPEATS = 10
 
 
@@ -177,7 +179,7 @@ def stratified_sample(rows_by_url, seed):
     with each distinct sampled document weighted by its stratum's
     population / sample, so weighted sums estimate the whole input;
     ``timings`` repeats small strata's documents (weights divided
-    alike) so each stratum has up to ``STRATUM_QUOTA`` timing samples;
+    alike) so each stratum has ``MIN_TIMED`` timing samples if it can;
     ``sizes`` is ``(population, documents sampled, timing samples)``
     per stratum."""
     members = [[] for _ in STRATA]
@@ -187,7 +189,7 @@ def stratified_sample(rows_by_url, seed):
     for i, urls in enumerate(members):
         rng = random.Random("kernel-sample:%d:%d" % (seed, i))
         picked = sorted(rng.sample(urls, min(STRATUM_QUOTA, len(urls))))
-        repeats = min(MAX_REPEATS, -(-STRATUM_QUOTA // max(len(picked), 1)))
+        repeats = min(MAX_REPEATS, -(-MIN_TIMED // max(len(picked), 1)))
         n_timed = len(picked) * repeats
         sizes.append((len(urls), len(picked), n_timed))
         docs.extend((u, len(urls) / len(picked)) for u in picked)

@@ -1,6 +1,7 @@
-"""The workloads and the traced resume scenario: seeded inputs on disk,
-the timed job, the output check, and the plan prefixes the traced run
-forces layer by layer.  Closed loop: one job at a time on one session."""
+"""The workloads and the resume scenario traced with ``web_pages``:
+seeded inputs on disk, the timed job, the output check, and the plan
+prefixes the traced run forces layer by layer.  Closed loop: one job at
+a time on one session."""
 
 from __future__ import annotations
 
@@ -62,13 +63,12 @@ def _canonical_rows(df):
 
 class Workload:
     """One workload: ``prepare`` writes the seeded input and computes
-    the expected output; ``steps`` is the timed job."""
+    the expected output; ``job`` is the timed job."""
 
     name = None
-    traced_scenarios = ()
 
     def __init__(self, seed, repo, work, nproc):
-        self.seed, self.repo, self.work = seed, repo, work
+        self.seed, self.repo, self.work, self.nproc = seed, repo, work, nproc
         # two scan partitions per core, at both scaling legs
         self.partitions = 2 * nproc
 
@@ -76,12 +76,11 @@ class Workload:
         """Untimed state reset before each job."""
 
     def job(self, spark):
-        for _, step in self.steps(spark):
-            step()
+        noop(self.canonical_frame(spark))
 
-    def materialized(self):
-        """Files, bytes and manifest rows the last job wrote."""
-        return {"files": 0, "bytes": 0, "manifest_rows": 0}
+    def output(self, spark):
+        """One evaluation of the job, its rows collected to the driver."""
+        return _canonical_rows(self.canonical_frame(spark))
 
     def check(self, spark):
         """(documents checked, failures) for one evaluation."""
@@ -97,7 +96,7 @@ class WebPages(Workload):
     extract + link -> colocated canonize, n-degree near zero."""
 
     name = "web_pages"
-    n_docs = 500
+    n_docs = 4000
 
     def __init__(self, seed, repo, work, nproc):
         super().__init__(seed, repo, work, nproc)
@@ -109,7 +108,8 @@ class WebPages(Workload):
         _write_parts(self.docs, DOC_SCHEMA,
                      os.path.join(self.sf_dir, "documents.parquet"),
                      self.partitions)
-        self.expected = checks.expected_pages(self._canonized_docs())
+        self.expected = checks.expected_pages(self._canonized_docs(),
+                                              self.nproc)
         self.n_quads = sum(nq.count("\n") for nq, _ in self.expected.values())
         self.n_docs_checked = len(self.expected)
 
@@ -133,15 +133,8 @@ class WebPages(Workload):
 
         return canonize_documents(quads, max_work_factor=MAX_WORK_FACTOR)
 
-    def steps(self, spark):
-        """The job as named blocking steps, run in order."""
-        return [("canon", lambda: noop(
-            self.canonical(spark, self.quads(spark, self.pages(spark)))))]
-
-    def output(self, spark):
-        """One evaluation of the job, its rows collected to the driver."""
-        return _canonical_rows(
-            self.canonical(spark, self.quads(spark, self.pages(spark))))
+    def canonical_frame(self, spark):
+        return self.canonical(spark, self.quads(spark, self.pages(spark)))
 
     def verify(self, rows):
         return len(self.expected), checks.check_canonical(rows, self.expected)
@@ -199,7 +192,7 @@ class BnodeDense(Workload):
     goes to hash-n-degree-quads and the permuter, not to transport."""
 
     name = "bnode_dense"
-    copies = 14
+    copies = 64
 
     def __init__(self, seed, repo, work, nproc):
         super().__init__(seed, repo, work, nproc)
@@ -222,12 +215,8 @@ class BnodeDense(Workload):
             quads, max_work_factor=MAX_WORK_FACTOR, strategy="repartition",
             num_partitions=self.partitions)
 
-    def steps(self, spark):
-        return [("canon", lambda: noop(
-            self.canonical(spark, self.quads(spark))))]
-
-    def output(self, spark):
-        return _canonical_rows(self.canonical(spark, self.quads(spark)))
+    def canonical_frame(self, spark):
+        return self.canonical(spark, self.quads(spark))
 
     def verify(self, rows):
         return len(self.docs), checks.check_dense(rows, self.docs)
@@ -249,11 +238,11 @@ class ResumeWrite(WebPages):
     web_pages urls; the job canonizes the rest, commits a batch and
     forces the frames ``run_pipeline`` returns.  Writes beside reads:
     a change to the write path or to how often the kernel runs per
-    batch shows here, a kernel speed-up barely does."""
+    batch shows here, a kernel speed-up barely does.  Traced with
+    ``web_pages``; it has no timed run of its own."""
 
     name = "resume_write"
     batch_id = 1
-    traced_scenarios = ()
 
     def __init__(self, seed, repo, work, nproc):
         super().__init__(seed, repo, work, nproc)
@@ -282,25 +271,23 @@ class ResumeWrite(WebPages):
         shutil.rmtree(self.out, ignore_errors=True)
         shutil.copytree(self.state, self.out)
 
-    def steps(self, spark):
-        """``write``: run_pipeline (resume, canonize, commit the batch);
-        ``derive``: force the frames it returns, as a deploy would."""
+    def write(self, spark):
+        """run_pipeline: resume, canonize the remainder, commit the
+        batch; returns the frames it builds."""
         from rdf_canonize_spark.pipeline.runner import run_pipeline
 
-        res = {}
+        return run_pipeline(
+            spark, self.pages(spark), max_work_factor=MAX_WORK_FACTOR,
+            out_dir=self.out, batch_id=self.batch_id)
 
-        def write():
-            res.update(run_pipeline(
-                spark, self.pages(spark), max_work_factor=MAX_WORK_FACTOR,
-                out_dir=self.out, batch_id=self.batch_id))
-
-        def derive():
-            for key in ("edges", "nodes", "lineage", "metrics"):
-                noop(res[key])
-
-        return [("write", write), ("derive", derive)]
+    @staticmethod
+    def derive(frames):
+        """Force the frames run_pipeline returns, as a deploy would."""
+        for key in ("edges", "nodes", "lineage", "metrics"):
+            noop(frames[key])
 
     def materialized(self):
+        """Files, bytes and manifest rows the last job wrote."""
         files = [os.path.join(d, f) for d, _, fs in os.walk(self.out)
                  for f in fs]
         before = {os.path.join(self.out, os.path.relpath(os.path.join(d, f),
@@ -342,9 +329,5 @@ class ResumeWrite(WebPages):
         # only the prefixes the materialize metrics difference
         return [("pages", pages), ("resume", todo), ("canon", canon)]
 
-
-# Scenarios traced alongside a workload: their per-layer numbers come
-# with that workload's traced run; they have no timed run of their own.
-WebPages.traced_scenarios = (ResumeWrite,)
 
 WORKLOADS = {w.name: w for w in (WebPages, BnodeDense)}
