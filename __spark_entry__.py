@@ -534,13 +534,10 @@ def q_canonize_incremental(spark, sf_dir):
     vs full recompute under real edits is byte-asserted in
     tests/test_pipeline_spark.py.
     """
-    from rdf_canonize_spark.pipeline.incremental import (
-        canonize_with_hash,
-        incremental_canonize,
-    )
+    from rdf_canonize_spark.pipeline.incremental import incremental_canonize
 
     quads = _quads(spark, sf_dir)
-    prior = canonize_with_hash(quads, max_work_factor=3)
+    prior = canonize_documents(quads, max_work_factor=3)
     inc = incremental_canonize(quads, prior, max_work_factor=3)
     return inc.select("url", "n_quads", "input_hash", "recomputed")
 

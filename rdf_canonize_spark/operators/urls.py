@@ -184,10 +184,9 @@ def blocklist_filter(df, blocked_hosts=BLOCKED_HOSTS,
         "^www\\.",
         "",
     )
-    suffix_hit = None
+    suffix_hit = F.lit(False)
     for sfx in blocked_suffixes:
-        hit = F.col("host").endswith(sfx)
-        suffix_hit = hit if suffix_hit is None else (suffix_hit | hit)
+        suffix_hit = suffix_hit | F.col("host").endswith(sfx)
     reason = (
         F.when(F.col("host").isin(*blocked_hosts), F.lit("host"))
         .when(suffix_hit, F.lit("suffix"))

@@ -1,21 +1,28 @@
-"""Per-document RDFC-1.0 canonicalization as a grouped-map Arrow UDF.
+"""Per-document RDFC-1.0 canonicalization: one kernel body, two UDF
+boundaries.
 
-``quads_df.groupBy('url').applyInPandas(...)`` -- each document's RDF
-dataset canonicalizes independently and partition-parallel.  This is
-the one stage that genuinely cannot be expressed in DataFrame algebra:
+``canonize_doc`` canonicalizes one document's quad rows.  The default
+stage runs it through ``mapInArrow`` over url-sorted, url-colocated
+partitions (many documents per Arrow batch, zero shuffle); the
+reference-shaped ``groupBy('url').applyInPandas(...)`` strategy runs
+the same body once per pandas group.  This is the one stage that
+genuinely cannot be expressed in DataFrame algebra:
 hash-n-degree-quads is sequential, stateful, recursive, and
-data-dependent (see SURVEY.md O9), exactly what grouped-map UDFs are
+data-dependent (see SURVEY.md O9), exactly what per-document UDFs are
 for.  Everything around it stays in Catalyst.
 
 Scale properties:
 
-* state is strictly per-group -- no global index, no driver collect;
-* a poison document raises inside its group only; the error is caught
-  and routed to the ``error`` column (quarantine), never failing the
-  job or stalling an executor (work budget enforced by max_work_factor);
-* output is a pure function of the group's rows -- content-deterministic
-  under re-partitioning (all reference-visible orderings are sorted);
-* group size is bounded upstream (documents are pages, not the corpus);
+* state is strictly per-document -- no global index, no driver collect;
+* a poison document raises inside its own call only; the error is
+  caught and routed to the ``error`` column (quarantine), never failing
+  the job or stalling an executor (work budget enforced by
+  max_work_factor, wall clock by doc_timeout_ms);
+* output is a pure function of the document's rows -- content-
+  deterministic under re-partitioning (all reference-visible orderings
+  are sorted);
+* document size is bounded upstream (documents are pages, not the
+  corpus) and optionally by ``max_doc_quads``;
   ``spark.sql.execution.arrow.maxRecordsPerBatch`` caps Arrow batches.
 """
 
@@ -140,66 +147,17 @@ def rows_to_dataset(rows):
     return dataset
 
 
-def make_canonize_fn(max_work_factor=3):
-    """Build the grouped-map function (serialized to executors)."""
-
-    cols = [
-        "s_kind", "s", "p", "o_kind", "o",
-        "o_datatype", "o_lang", "g_kind", "g",
-    ]
-
-    def canonize_group(key, pdf):
-        url = key[0]
-        rows = list(pdf[cols].itertuples(index=False, name=None))
-        input_hash = input_hash_of_rows(rows)
-        dataset = rows_to_dataset(rows)
-        n_bnodes = len(
-            {
-                t[1]
-                for q in dataset
-                for t in (q[0], q[2], q[3])
-                if t[0] == BLANK
-            }
-        )
-        id_map = {}
-        engine = RDFC10(
-            canonical_id_map=id_map, max_work_factor=max_work_factor
-        )
-        try:
-            nquads = engine.main(dataset)
-            error = None
-        except Exception as e:  # budget/timeout -> quarantine row
-            nquads = None
-            id_map = None
-            error = str(e)
-        quads_hash = hashlib.sha256(
-            nquads.encode("utf-8", "surrogatepass")
-        ).hexdigest() if nquads is not None else None
-        return pd.DataFrame(
-            [
-                {
-                    "url": url,
-                    "nquads": nquads,
-                    "label_map": id_map,
-                    "n_quads": len(dataset),
-                    "n_bnodes": n_bnodes,
-                    "deep_iterations": engine.deep_iterations_used,
-                    "quads_hash": quads_hash,
-                    "error": error,
-                    "input_hash": input_hash,
-                }
-            ]
-        )
-
-    return canonize_group
-
-
 OVERSIZED_PREFIX = "Document exceeds maximum quad count"
 
+_COLS = ["s_kind", "s", "p", "o_kind", "o",
+         "o_datatype", "o_lang", "g_kind", "g"]
 
-def _canonize_rows_for_url(url, rows, max_work_factor, doc_timeout_ms=0,
-                           max_doc_quads=0,
-                           message_digest_algorithm="sha256"):
+
+def canonize_doc(url, rows, max_work_factor, doc_timeout_ms=0,
+                 max_doc_quads=0, message_digest_algorithm="sha256"):
+    """The per-document kernel body: one url's ordered quad-table row
+    tuples (``_COLS`` order) in, one CANONICAL_SCHEMA dict out.  Every
+    strategy runs it (or its ``kernel_fn`` swap) once per document."""
     input_hash = input_hash_of_rows(rows)
     if max_doc_quads and len(rows) > max_doc_quads:
         # Mega-document routing (SCALE.md): bound per-task memory by
@@ -258,83 +216,20 @@ def _canonize_rows_for_url(url, rows, max_work_factor, doc_timeout_ms=0,
     }
 
 
-_COLS = ["s_kind", "s", "p", "o_kind", "o",
-         "o_datatype", "o_lang", "g_kind", "g"]
-
-
-def make_canonize_map_fn(max_work_factor=3, max_doc_quads=0):
-    """``mapInPandas`` kernel: many documents per Arrow batch.
-
-    Requires rows sorted by url within each partition and each url
-    wholly contained in one partition.  A url whose rows straddle an
-    Arrow-batch boundary is carried into the next batch; batch
-    boundaries never split a document's output.
-
-    This is the scale path: ``applyInPandas`` pays per-group overhead
-    (one Python call + frame per document), which dominates when
-    documents are small -- the common case in web corpora.  Here the
-    per-document cost is one dict append.
-    """
-
-    def canonize_partition(batches):
-        carry = None
-
-        def process(pdf):
-            out = []
-            url_col = pdf["url"].values
-            col_vals = [pdf[c].values for c in _COLS]
-            cur_url = None
-            cur_rows = []
-            for i in range(len(pdf)):
-                u = url_col[i]
-                if u != cur_url:
-                    if cur_url is not None:
-                        out.append(
-                            _canonize_rows_for_url(
-                                cur_url, cur_rows, max_work_factor,
-                                max_doc_quads=max_doc_quads,
-                            )
-                        )
-                    cur_url, cur_rows = u, []
-                cur_rows.append(tuple(v[i] for v in col_vals))
-            if cur_url is not None:
-                out.append(
-                    _canonize_rows_for_url(cur_url, cur_rows,
-                                           max_work_factor,
-                                           max_doc_quads=max_doc_quads)
-                )
-            return pd.DataFrame(out)
-
-        for pdf in batches:
-            if carry is not None:
-                pdf = pd.concat([carry, pdf], ignore_index=True)
-                carry = None
-            if len(pdf) == 0:
-                continue
-            last_url = pdf["url"].iat[len(pdf) - 1]
-            mask = pdf["url"] == last_url
-            carry = pdf[mask]
-            complete = pdf[~mask]
-            if len(complete):
-                yield process(complete)
-        if carry is not None and len(carry):
-            yield process(carry)
-
-    return canonize_partition
-
-
 def make_canonize_arrow_fn(max_work_factor=3, doc_timeout_ms=0,
                            max_doc_quads=0,
                            message_digest_algorithm="sha256",
                            kernel_fn=None):
     """``mapInArrow`` kernel: pyarrow batches in and out, no pandas.
 
-    Same contract as the pandas kernel (url-sorted partitions, urls not
-    split across partitions), but the Arrow<->Python boundary is raw
-    ``to_pylist`` / ``RecordBatch.from_arrays`` -- measured ~2-3x less
-    overhead than the pandas conversion for this row shape, which
-    matters because transport, not canonicalization, is the stage's
-    marginal cost for small documents.
+    Many documents per batch: requires rows sorted by url within each
+    partition and each url wholly contained in one partition; a url
+    whose rows straddle a batch boundary is carried into the next.  The
+    Arrow<->Python boundary is raw ``to_pylist`` /
+    ``RecordBatch.from_arrays`` -- measured ~2-3x less overhead than a
+    pandas conversion for this row shape, which matters because
+    transport, not canonicalization, is the stage's marginal cost for
+    small documents.
     """
     import pyarrow as pa
 
@@ -370,9 +265,9 @@ def make_canonize_arrow_fn(max_work_factor=3, doc_timeout_ms=0,
         ]
         return pa.RecordBatch.from_arrays(arrays, schema=out_type)
 
-    _kernel = kernel_fn or _canonize_rows_for_url
+    _kernel = kernel_fn or canonize_doc
 
-    def canonize_doc(url, rows):
+    def doc_row(url, rows):
         r = _kernel(
             url, rows, max_work_factor, doc_timeout_ms, max_doc_quads,
             message_digest_algorithm,
@@ -404,15 +299,33 @@ def make_canonize_arrow_fn(max_work_factor=3, doc_timeout_ms=0,
             for u, row in zip(urls, rows):
                 if u != cur_url:
                     if cur_url is not None:
-                        results.append(canonize_doc(cur_url, cur_rows))
+                        results.append(doc_row(cur_url, cur_rows))
                     cur_url, cur_rows = u, []
                 cur_rows.append(row)
             if results:
                 yield flush(results)
         if cur_url is not None:
-            yield flush([canonize_doc(cur_url, cur_rows)])
+            yield flush([doc_row(cur_url, cur_rows)])
 
     return canonize_partition
+
+
+def make_canonize_group_fn(max_work_factor=3, doc_timeout_ms=0,
+                           max_doc_quads=0,
+                           message_digest_algorithm="sha256",
+                           kernel_fn=None):
+    """``applyInPandas`` adapter: one pandas frame per document in, the
+    same ``canonize_doc`` (or ``kernel_fn``) body, one row out."""
+    _kernel = kernel_fn or canonize_doc
+
+    def canonize_group(key, pdf):
+        rows = list(zip(*(pdf[c].tolist() for c in _COLS)))
+        return pd.DataFrame([_kernel(
+            key[0], rows, max_work_factor, doc_timeout_ms, max_doc_quads,
+            message_digest_algorithm,
+        )])
+
+    return canonize_group
 
 
 # Measured hybrid/kernel crossover (tools/head2head A/B, SCALE.md): at
@@ -450,16 +363,17 @@ def canonize_documents(
     Spark counterpart of the reference's native-implementation
     delegation point (``lib/index.js:90-95,151-162``, where a compiled
     rdf-canonize-native can replace the JS algorithm).  Signature and
-    return contract are ``_canonize_rows_for_url``'s (same ordered row
-    tuples in, same CANONICAL_SCHEMA dict out); the callable is
-    serialized to executors, so an accelerated implementation (e.g. a
-    C/Rust extension imported inside the function) plugs in without
-    touching the Spark plumbing.  Arrow-kernel strategies only.
+    return contract are ``canonize_doc``'s (same ordered row tuples in,
+    same CANONICAL_SCHEMA dict out); the callable is serialized to
+    executors, so an accelerated implementation (e.g. a C/Rust
+    extension imported inside the function) plugs in without touching
+    the Spark plumbing.  Every strategy honors it, and every kernel
+    parameter, because every strategy runs the one body.
 
     Strategies:
 
     * ``'colocated'`` (default) -- zero-shuffle: ``sortWithinPartitions
-      ('url')`` (partition-local sort) + ``mapInPandas``.  Valid when
+      ('url')`` (partition-local sort) + ``mapInArrow``.  Valid when
       each url's quads already live in one partition, which
       ``build_quads`` guarantees (narrow explode + broadcast joins over
       one pages scan).  At 100 TB this saves the single biggest cost in
@@ -468,84 +382,49 @@ def canonize_documents(
       first, then the same batched kernel.  url is high-cardinality and
       uniform, so no skew handling is needed on this key.
     * ``'grouped'`` -- reference-shaped ``groupBy.applyInPandas``; one
-      Python call per document.  Kept for differential testing.
+      Python call and one pandas frame per document.
+    * ``'hybrid'`` -- ``hybrid_canonize_documents``: pure-Catalyst
+      canonicalization for eligible documents, the colocated kernel
+      for the rest.
     * ``'auto'`` -- pick per the measured crossover
-      (``select_canonize_strategy``): the hybrid SQL router on
-      low-core sessions, the colocated Arrow kernel otherwise.  Both
-      arms produce identical bytes (pinned by
-      test_hybrid_router_byte_equals_kernel), so the choice is purely
-      a throughput decision.
+      (``select_canonize_strategy``): ``'hybrid'`` on low-core
+      sessions, ``'colocated'`` otherwise.  Both arms produce identical
+      bytes (pinned by test_hybrid_router_byte_equals_kernel), so the
+      choice is purely a throughput decision.
     """
+    params = (max_work_factor, doc_timeout_ms, max_doc_quads,
+              message_digest_algorithm, kernel_fn)
     if strategy == "auto":
-        cores = quads_df.sparkSession.sparkContext.defaultParallelism
-        if select_canonize_strategy(cores) == "hybrid":
-            return hybrid_canonize_documents(
-                quads_df,
-                max_work_factor=max_work_factor,
-                num_partitions=num_partitions,
-                doc_timeout_ms=doc_timeout_ms,
-                max_doc_quads=max_doc_quads,
-                message_digest_algorithm=message_digest_algorithm,
-                kernel_fn=kernel_fn,
-            )
-        strategy = "colocated"
-    if message_digest_algorithm != "sha256" and strategy not in (
-        "colocated", "repartition"
-    ):
-        # only the Arrow kernel is digest-parameterized; refuse rather
-        # than silently hash with the wrong algorithm
-        raise ValueError(
-            "non-sha256 digests require the 'colocated' or "
-            "'repartition' strategy"
+        strategy = select_canonize_strategy(
+            quads_df.sparkSession.sparkContext.defaultParallelism
         )
-    if kernel_fn is not None and strategy not in (
-        "colocated", "repartition"
-    ):
-        raise ValueError(
-            "kernel_fn requires the 'colocated' or 'repartition' "
-            "strategy (the Arrow kernel surface)"
+    if strategy == "hybrid":
+        return hybrid_canonize_documents(
+            quads_df,
+            max_work_factor=max_work_factor,
+            num_partitions=num_partitions,
+            doc_timeout_ms=doc_timeout_ms,
+            max_doc_quads=max_doc_quads,
+            message_digest_algorithm=message_digest_algorithm,
+            kernel_fn=kernel_fn,
         )
-    # refuse rather than silently ignore (same contract as the digest
-    # guard): only the Arrow kernel implements the per-document
-    # timeout, and the grouped strategy has no quad cap either
-    if doc_timeout_ms and strategy not in ("colocated", "repartition"):
-        raise ValueError(
-            "doc_timeout_ms requires the 'colocated' or 'repartition' "
-            "strategy"
-        )
-    if max_doc_quads and strategy == "grouped":
-        raise ValueError(
-            "max_doc_quads is not implemented for the 'grouped' "
-            "strategy (use colocated/colocated_pandas/repartition)"
-        )
+    df = quads_df.select("url", *_COLS)
     if strategy == "grouped":
-        df = quads_df
         if num_partitions:
             df = df.repartition(num_partitions, "url")
         return df.groupBy("url").applyInPandas(
-            make_canonize_fn(max_work_factor), CANONICAL_SCHEMA
+            make_canonize_group_fn(*params), CANONICAL_SCHEMA
         )
     if strategy == "repartition":
-        df = quads_df.repartition(
+        df = df.repartition(
             num_partitions or quads_df.sparkSession.sparkContext
             .defaultParallelism,
             "url",
         )
-    elif strategy in ("colocated", "colocated_pandas"):
-        df = quads_df
-    else:
+    elif strategy != "colocated":
         raise ValueError(f"unknown strategy: {strategy}")
-    df = df.select("url", *_COLS).sortWithinPartitions("url")
-    if strategy == "colocated_pandas":
-        return df.mapInPandas(
-            make_canonize_map_fn(max_work_factor, max_doc_quads),
-            CANONICAL_SCHEMA,
-        )
-    return df.mapInArrow(
-        make_canonize_arrow_fn(max_work_factor, doc_timeout_ms,
-                               max_doc_quads, message_digest_algorithm,
-                               kernel_fn),
-        CANONICAL_SCHEMA,
+    return df.sortWithinPartitions("url").mapInArrow(
+        make_canonize_arrow_fn(*params), CANONICAL_SCHEMA
     )
 
 

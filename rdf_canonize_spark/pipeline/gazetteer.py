@@ -54,13 +54,6 @@ def gazetteer_rows():
     return [(s, entity_iri(s)) for s in KNOWN_SURFACES]
 
 
-def sql_values_gazetteer():
-    """The gazetteer as a SQL VALUES list (for DuckDB oracle CTEs)."""
-    return ", ".join(
-        "('%s', '%s')" % (s, entity_iri(s)) for s in KNOWN_SURFACES
-    )
-
-
 def sql_array_surfaces():
     """All 200 surfaces as a SQL array literal (1-indexed element_at)."""
     return "array(" + ", ".join("'%s'" % s for s in SURFACES) + ")"

@@ -25,6 +25,7 @@ from __future__ import annotations
 
 import os
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import functions as F
 
 from ..rdfc.terms import BLANK
@@ -133,7 +134,9 @@ def resume_filter(spark, pages_df, out_dir):
     mpath = manifest_path(out_dir)
     try:
         done = spark.read.parquet(mpath).select("url")
-    except Exception:
+    except AnalysisException as e:
+        if e.getCondition() != "PATH_NOT_FOUND":
+            raise  # an unreadable manifest must not rerun finished urls
         return pages_df  # no manifest yet -> full input
     return pages_df.join(done, "url", "left_anti")
 

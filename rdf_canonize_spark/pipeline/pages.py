@@ -39,16 +39,18 @@ _EPOCH = 1767225600
 
 _LANGS = "array('en', 'de', 'fr', 'es')"
 
-
-# upper bound of the per-page statement loop; heavy generator overrides
+# upper bound of the per-page statement loop (statements 0..m):
+# 1 + k % 5 statements for the oracle-checked pages, 16 + k % 8 heavy
 _STATEMENTS_M_EXPR = "cast(pmod({k}, 5) as int)"
+_HEAVY_STATEMENTS_M_EXPR = "15 + cast(pmod({k}, 8) as int)"
 
 
-def _statements_sql(k="k"):
-    """Spark SQL expression producing the concatenated statement text."""
+def _statements_sql(k, m_expr):
+    """Spark SQL expression producing the concatenated statement text;
+    ``m_expr`` is the loop's upper bound, a template over ``{k}``."""
     surf = sql_array_surfaces()
     rel = sql_array_relations()
-    m_expr = _STATEMENTS_M_EXPR.format(k=k)
+    m_expr = m_expr.format(k=k)
     return f"""
       array_join(
         transform(
@@ -89,9 +91,10 @@ def duckdb_statements_sql(k="k"):
     """
 
 
-def _with_page_columns(df, k_col, base_text_col, lang_expr):
+def _with_page_columns(df, k_col, base_text_col, lang_expr,
+                       m_expr=_STATEMENTS_M_EXPR):
     """Project the input_hint page schema from a key + base text."""
-    stmts = _statements_sql(k_col)
+    stmts = _statements_sql(k_col, m_expr)
     return df.select(
         F.expr(
             f"concat('https://crawl.example.org/p/', "
@@ -142,18 +145,13 @@ def synthesize_heavy_pages(spark, n_docs, partitions=None):
         partitions or spark.sparkContext.defaultParallelism,
     )
     df = rng.withColumnRenamed("id", "k")
-    global _STATEMENTS_M_EXPR
-    saved = _STATEMENTS_M_EXPR
-    try:
-        _STATEMENTS_M_EXPR = "15 + cast(pmod({k}, 8) as int)"
-        return _with_page_columns(
-            df,
-            "k",
-            "concat('Synthetic crawl body for page ', cast(k as string), '.')",
-            f"element_at({_LANGS}, cast(pmod(k, 4) as int) + 1)",
-        )
-    finally:
-        _STATEMENTS_M_EXPR = saved
+    return _with_page_columns(
+        df,
+        "k",
+        "concat('Synthetic crawl body for page ', cast(k as string), '.')",
+        f"element_at({_LANGS}, cast(pmod(k, 4) as int) + 1)",
+        _HEAVY_STATEMENTS_M_EXPR,
+    )
 
 
 def pages_from_documents(spark, sf_dir, min_parallelism=None):

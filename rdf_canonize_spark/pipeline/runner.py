@@ -2,11 +2,13 @@
 
 pages -> [extract: Catalyst regexp] -> mentions
       -> [link: broadcast gazetteer join] -> quads
-      -> [canonize: groupBy(url).applyInPandas(RDFC-1.0)] -> canonical
+      -> [canonize: per-document RDFC-1.0 kernel] -> canonical
       -> [materialize: edges/nodes/lineage/metrics (+ checkpointed writes)]
 
-Control crosses the JVM<->Python boundary exactly once (the canonize
-grouped-map UDF); everything else is whole-stage-codegen relational.
+Control crosses the JVM<->Python boundary exactly once: the canonize
+stage, by default the colocated ``mapInArrow`` kernel (the ``grouped``
+strategy runs the same per-document body through ``applyInPandas``);
+everything else is whole-stage-codegen relational.
 """
 
 from __future__ import annotations
@@ -36,24 +38,15 @@ def run_pipeline(
 
     With ``out_dir`` set, performs the checkpointed write (resuming past
     completed urls from the manifest).  ``strategy`` passes through to
-    ``canonize_documents`` ('colocated' default; 'auto' applies the
-    measured hybrid/kernel core-count crossover; 'hybrid' etc. as
-    documented there).
+    ``canonize_documents``, which documents every value.
     """
     gaz = gazetteer_df(spark)
     if out_dir:
         pages_df = resume_filter(spark, pages_df, out_dir)
     quads = build_quads(pages_df, gaz, extract_fn=extract_fn)
-    if strategy == "hybrid":
-        from .canon_stage import hybrid_canonize_documents
-
-        canonical = hybrid_canonize_documents(
-            quads, max_work_factor=max_work_factor
-        )
-    else:
-        canonical = canonize_documents(
-            quads, max_work_factor=max_work_factor, strategy=strategy
-        )
+    canonical = canonize_documents(
+        quads, max_work_factor=max_work_factor, strategy=strategy
+    )
     results = {
         "quads": quads,
         "canonical": canonical,

@@ -80,30 +80,6 @@ def quad_from_rdfjs(q):
     )
 
 
-def term_to_rdfjs(t):
-    kind, value, datatype, language = t
-    if kind == LITERAL:
-        out = {
-            "termType": "Literal",
-            "value": value,
-            "datatype": {"termType": "NamedNode", "value": datatype},
-        }
-        if language:
-            out["language"] = language
-        return out
-    return {"termType": KIND_NAMES[kind], "value": value}
-
-
-def quad_to_rdfjs(q):
-    s, p, o, g = q
-    return {
-        "subject": term_to_rdfjs(s),
-        "predicate": term_to_rdfjs(p),
-        "object": term_to_rdfjs(o),
-        "graph": term_to_rdfjs(g),
-    }
-
-
 def utf16_sort_key(s):
     """Sort key reproducing JavaScript's UTF-16 code-unit string order.
 

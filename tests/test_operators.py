@@ -639,7 +639,8 @@ def test_length_histogram_and_blocklist_planted(spark):
     """Length histogram: bucket b holds 2^(b-1) <= n < 2^b, empty
     docs land in bucket 0, aggregates are exact.  Blocklist gate:
     exact-host and suffix rules fire with host precedence, hosts are
-    normalized (case/port/www/userinfo), clean hosts pass."""
+    normalized (case/port/www/userinfo), clean hosts pass, and an empty
+    host or suffix list disables only that rule."""
     from rdf_canonize_spark.operators.textstats import length_histogram
     from rdf_canonize_spark.operators.urls import blocklist_filter
 
@@ -678,6 +679,19 @@ def test_length_histogram_and_blocklist_planted(spark):
     assert got_b[3] == ("site4.example.com", None, False)
     # suffix match is on the host tail, not a substring anywhere
     assert got_b[4] == ("site13.example.com.evil.org", None, False)
+    # an empty list (a plausible config state) blocks nothing by that rule
+    no_sfx = {
+        r["doc_id"]: (r["block_reason"], r["blocked"])
+        for r in blocklist_filter(urls_df, blocked_suffixes=()).collect()
+    }
+    assert no_sfx == {1: (None, False), 2: ("host", True),
+                      3: (None, False), 4: (None, False)}
+    no_host = {
+        r["doc_id"]: (r["block_reason"], r["blocked"])
+        for r in blocklist_filter(urls_df, blocked_hosts=()).collect()
+    }
+    assert no_host == {1: ("suffix", True), 2: (None, False),
+                       3: (None, False), 4: (None, False)}
 
 
 def test_entity_cooccurrence_planted(spark):

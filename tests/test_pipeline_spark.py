@@ -1,9 +1,10 @@
 """End-to-end Spark pipeline tests.
 
-The load-bearing check: the ``groupBy('url').applyInPandas`` canonize
-stage must produce, for every document, byte-identical canonical
-N-Quads to the pure-Python core run standalone on that document's
-quads (which is itself differential-tested against the reference).
+The load-bearing check: the canonize stage must produce, for every
+document, byte-identical canonical N-Quads to the pure-Python core run
+standalone on that document's quads (which is itself
+differential-tested against the reference), whichever strategy runs
+the per-document body.
 """
 
 import pandas as pd
@@ -101,23 +102,23 @@ def test_spark_canonical_matches_pure_python(results):
 
 def test_canonical_output_is_repartition_invariant(spark, results):
     """Content determinism: canonize after an adversarial repartition
-    and shuffled row order; outputs must be identical."""
+    and shuffled row order; every output column must be identical."""
     quads = results["quads"]
     # round-robin repartition scatters a url's rows across partitions;
     # the generic 'repartition' strategy must regroup and still match
     shuffled = quads.repartition(13).sortWithinPartitions("o", "p")
     a = {
-        r["url"]: r["nquads"]
+        r["url"]: _canon_key(r)
         for r in canonize_documents(quads, max_work_factor=3).collect()
     }
     b = {
-        r["url"]: r["nquads"]
+        r["url"]: _canon_key(r)
         for r in canonize_documents(
             shuffled, max_work_factor=3, strategy="repartition"
         ).collect()
     }
     c = {
-        r["url"]: r["nquads"]
+        r["url"]: _canon_key(r)
         for r in canonize_documents(
             shuffled, max_work_factor=3, strategy="grouped"
         ).collect()
@@ -198,6 +199,36 @@ def test_checkpoint_resume(spark, tmp_path):
     assert dict(done.dtypes)["batch"] == "int"
 
 
+def test_resume_filter_raises_on_corrupt_manifest(spark, tmp_path):
+    """An unreadable manifest must fail loudly: treating it as 'no
+    manifest' would rerun every finished url into a new batch."""
+    from rdf_canonize_spark.pipeline.materialize import resume_filter
+
+    out = tmp_path / "ckpt"
+    (out / "_manifest").mkdir(parents=True)
+    (out / "_manifest" / "part-0.parquet").write_bytes(b"not parquet")
+    pages = synthesize_pages(spark, 10)
+    with pytest.raises(Exception, match="is not a Parquet file"):
+        resume_filter(spark, pages, str(out))
+
+
+def test_heavy_pages_statement_counts(spark):
+    """Heavy page k carries 16 + k % 8 statements, and the oracle-checked
+    generator keeps 1 + k % 5 when called after it."""
+    from rdf_canonize_spark.pipeline.pages import synthesize_heavy_pages
+
+    def counts(pages):
+        return {
+            int(r["url"].rsplit("/", 1)[1]): r["text"].count("KG: ")
+            for r in pages.select("url", "text").collect()
+        }
+
+    heavy = counts(synthesize_heavy_pages(spark, 16))
+    assert heavy == {k: 16 + k % 8 for k in range(16)}
+    light = counts(synthesize_pages(spark, 16))
+    assert light == {k: 1 + k % 5 for k in range(16)}
+
+
 def test_pages_from_documents(spark, sf_dir):
     pages = pages_from_documents(spark, sf_dir)
     row = pages.first()
@@ -217,7 +248,8 @@ def test_triple_agreement_pr_gate(spark, sf_dir):
     assert m["recall"] == 1.0, m
 
 
-def test_doc_timeout_quarantines_stragglers(spark):
+@pytest.mark.parametrize("strategy", ["repartition", "grouped"])
+def test_doc_timeout_quarantines_stragglers(spark, strategy):
     """A pathological document with an unbounded work factor must hit
     the per-document wall-clock timeout and quarantine, not stall the
     executor."""
@@ -241,7 +273,7 @@ def test_doc_timeout_quarantines_stragglers(spark):
         r["url"]: r
         for r in canonize_documents(
             df, max_work_factor=float("inf"),
-            strategy="repartition", doc_timeout_ms=100,
+            strategy=strategy, doc_timeout_ms=100,
         ).collect()
     }
     assert got["poison://doc"]["error"] == "Canonize timeout."
@@ -250,7 +282,8 @@ def test_doc_timeout_quarantines_stragglers(spark):
     assert got["ok://doc"]["nquads"].startswith("<http://s>")
 
 
-def test_mega_document_routing(spark, pages):
+@pytest.mark.parametrize("strategy", ["colocated", "repartition", "grouped"])
+def test_mega_document_routing(spark, pages, strategy):
     """max_doc_quads quarantines oversized documents cheaply;
     requeue_oversized re-derives exactly their quads, and the
     high-memory rerun on that subset matches the uncapped run."""
@@ -263,7 +296,8 @@ def test_mega_document_routing(spark, pages):
     quads = build_quads(pages, gazetteer_df(spark)).cache()
     uncapped = {
         r["url"]: r["quads_hash"]
-        for r in canonize_documents(quads, max_work_factor=3).collect()
+        for r in canonize_documents(
+            quads, max_work_factor=3, strategy=strategy).collect()
     }
     sizes = {
         r["url"]: r["n"]
@@ -271,7 +305,7 @@ def test_mega_document_routing(spark, pages):
     }
     cap = sorted(sizes.values())[len(sizes) // 2]  # median -> both sides
     capped = canonize_documents(
-        quads, max_work_factor=3, max_doc_quads=cap
+        quads, max_work_factor=3, max_doc_quads=cap, strategy=strategy
     ).cache()
     ok, quarantined = split_canonical(capped)
     ok_urls = {r["url"] for r in ok.select("url").collect()}
@@ -288,7 +322,8 @@ def test_mega_document_routing(spark, pages):
     requeued = requeue_oversized(quads, capped)
     rerun = {
         r["url"]: r["quads_hash"]
-        for r in canonize_documents(requeued, max_work_factor=3).collect()
+        for r in canonize_documents(
+            requeued, max_work_factor=3, strategy=strategy).collect()
     }
     assert rerun == {u: uncapped[u] for u in bad}
     quads.unpersist()
@@ -299,14 +334,11 @@ def test_incremental_canonize_recomputes_only_changed(spark, pages):
     """Recrawl path: unchanged documents carry forward byte-identically
     with zero kernel work; changed documents recompute; the combined
     output equals a full recanonicalization."""
-    from rdf_canonize_spark.pipeline.incremental import (
-        canonize_with_hash,
-        incremental_canonize,
-    )
+    from rdf_canonize_spark.pipeline.incremental import incremental_canonize
     from rdf_canonize_spark.pipeline.link import build_quads, gazetteer_df
 
     quads1 = build_quads(pages, gazetteer_df(spark)).cache()
-    prior = canonize_with_hash(quads1, max_work_factor=3).cache()
+    prior = canonize_documents(quads1, max_work_factor=3).cache()
 
     # "recrawl": ~1/6 of documents gain one extra statement quad
     changed = quads1.select("url").distinct().filter(
@@ -331,7 +363,7 @@ def test_incremental_canonize_recomputes_only_changed(spark, pages):
     assert inc.filter("recomputed").count() == n_changed
     assert inc.count() == prior.count()
 
-    full2 = canonize_with_hash(
+    full2 = canonize_documents(
         quads2, max_work_factor=3, strategy="repartition"
     )
     a = {r["url"]: (r["nquads"], r["quads_hash"], r["input_hash"])
@@ -384,7 +416,7 @@ def test_lone_surrogate_input_hash_parity(spark):
     incremental_canonize with NO silent recomputed=true flip."""
     from rdf_canonize_spark.pipeline.canon_stage import (
         CANONICAL_SCHEMA,
-        _canonize_rows_for_url,
+        canonize_doc,
         input_hash_of_rows,
     )
     from rdf_canonize_spark.pipeline.incremental import (
@@ -413,7 +445,7 @@ def test_lone_surrogate_input_hash_parity(spark):
 
     # end-to-end: prior computed PURE-PYTHON from the raw rows, then
     # the same crawl re-ingested -- every row must carry forward
-    prior_rec = _canonize_rows_for_url(url, rows, 3)
+    prior_rec = canonize_doc(url, rows, 3)
     assert prior_rec["error"] is None
     prior_df = spark.createDataFrame([prior_rec], CANONICAL_SCHEMA)
     inc = incremental_canonize(df, prior_df, max_work_factor=3).collect()
@@ -639,9 +671,9 @@ def test_pluggable_kernel_seam(spark):
     counterpart of the reference's native-implementation delegation
     point, lib/index.js:90-95): a wrapping kernel must see every
     document exactly once with the documented signature, and its
-    output rides the normal Arrow plumbing unchanged."""
+    output rides the normal plumbing of every strategy unchanged."""
     from rdf_canonize_spark.pipeline.canon_stage import (
-        _canonize_rows_for_url,
+        canonize_doc,
         canonize_documents,
     )
 
@@ -656,7 +688,7 @@ def test_pluggable_kernel_seam(spark):
     df = spark.createDataFrame(rows, schema)
 
     def tagging_kernel(url, rows_, wf, timeout, cap, digest):
-        r = _canonize_rows_for_url(url, rows_, wf, timeout, cap, digest)
+        r = canonize_doc(url, rows_, wf, timeout, cap, digest)
         r["deep_iterations"] = 777  # visible marker of the swap
         return r
 
@@ -670,11 +702,14 @@ def test_pluggable_kernel_seam(spark):
         assert r["deep_iterations"] == 777
         assert r["nquads"] == base[url]["nquads"]
         assert r["quads_hash"] == base[url]["quads_hash"]
-    # the seam is Arrow-kernel-only: grouped strategy must refuse
-    import pytest as _pytest
-    with _pytest.raises(ValueError):
-        canonize_documents(df, strategy="grouped",
-                           kernel_fn=tagging_kernel)
+    # the grouped strategy runs the same seam
+    grouped = {r["url"]: r for r in canonize_documents(
+        df, max_work_factor=3, strategy="grouped",
+        kernel_fn=tagging_kernel).collect()}
+    assert set(grouped) == set(base)
+    for url, r in grouped.items():
+        assert r["deep_iterations"] == 777
+        assert r["nquads"] == base[url]["nquads"]
 
 
 def test_hybrid_non_default_digest_routes_all_to_kernel(spark):
@@ -710,3 +745,64 @@ def test_hybrid_non_default_digest_routes_all_to_kernel(spark):
     # the digest's byte-effect on outputs is pinned by the
     # digest-sha384/512 fixtures; here the contract under test is the
     # all-kernel routing and exact kernel parity asserted above)
+
+
+def test_grouped_honors_every_kernel_parameter(spark):
+    """One body behind both boundaries: with a timeout, a quad cap, a
+    non-default digest and a swapped kernel, the grouped strategy's
+    rows equal the Arrow kernel's on every output column."""
+    from rdf_canonize_spark.pipeline.canon_stage import (
+        CANONICAL_SCHEMA,
+        OVERSIZED_PREFIX,
+        canonize_doc,
+        canonize_documents,
+    )
+    from rdf_canonize_spark.rdfc.graphs import make_data_b
+
+    schema = ("url string, s_kind int, s string, p string, o_kind int, "
+              "o string, o_datatype string, o_lang string, g_kind int, "
+              "g string")
+    _, poison = make_data_b(7)
+    rows = []
+    for line in poison.strip().split("\n"):
+        s, p, o, _ = line.split(" ")
+        rows.append(("u:poison", 1, s[2:], p[1:-1], 1, o[2:],
+                     None, None, 3, ""))
+    # two bnodes whose canonical order differs between sha256 and sha384
+    rows += [("u:digest", 1, "a", "http://x.example/p", 2, "v0",
+              None, None, 3, ""),
+             ("u:digest", 1, "b", "http://x.example/q", 2, "w",
+              None, None, 3, "")]
+    cap = len(rows)  # admits the poison document, not the big one
+    rows += [("u:big", 0, f"http://x.example/s{i}", "http://x.example/p",
+              2, f"v{i}", None, None, 3, "") for i in range(cap + 1)]
+    df = spark.createDataFrame(rows, schema)
+
+    def tagging_kernel(url, rows_, wf, timeout, cap_, digest):
+        r = canonize_doc(url, rows_, wf, timeout, cap_, digest)
+        r["deep_iterations"] = 777  # the timeout's depth is not stable
+        return r
+
+    params = dict(max_work_factor=float("inf"), doc_timeout_ms=100,
+                  max_doc_quads=cap, message_digest_algorithm="sha384",
+                  kernel_fn=tagging_kernel)
+    cols = [f.name for f in CANONICAL_SCHEMA.fields]
+    got = {}
+    for strategy in ("repartition", "grouped"):
+        got[strategy] = {
+            r["url"]: tuple(
+                dict(r[c]) if c == "label_map" and r[c] else r[c]
+                for c in cols)
+            for r in canonize_documents(
+                df, strategy=strategy, **params).collect()
+        }
+    assert got["grouped"] == got["repartition"]
+    out = {u: dict(zip(cols, v)) for u, v in got["grouped"].items()}
+    assert out["u:poison"]["error"] == "Canonize timeout."
+    assert out["u:big"]["error"].startswith(OVERSIZED_PREFIX)
+    assert all(r["deep_iterations"] == 777 for r in out.values())
+    sha256 = canonize_documents(
+        df.filter("url = 'u:digest'"), strategy="grouped"
+    ).collect()[0]
+    assert out["u:digest"]["error"] is None
+    assert out["u:digest"]["nquads"] != sha256["nquads"]

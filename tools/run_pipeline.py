@@ -38,8 +38,8 @@ def main(argv=None):
     p.add_argument("--batch-id", type=int, default=0)
     p.add_argument("--max-work-factor", type=float, default=3)
     p.add_argument("--strategy", default="colocated",
-                   choices=["colocated", "colocated_pandas",
-                            "repartition", "grouped", "hybrid", "auto"],
+                   choices=["colocated", "repartition", "grouped",
+                            "hybrid", "auto"],
                    help="canonize strategy; 'auto' applies the "
                         "measured hybrid/kernel core-count crossover")
     p.add_argument("--master", default=None,
