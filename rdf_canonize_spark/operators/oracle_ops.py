@@ -275,7 +275,8 @@ robots AS (
 _ROBOTS_RULES_CTES = """
 rlines AS (
   SELECT host, CAST(i AS INT) - 1 AS line_idx,
-    trim(regexp_replace(raw, '#.*$', '')) AS clean
+    trim(regexp_replace(replace(raw, chr(13), ''), '#[^\\n]*', ''))
+      AS clean
   FROM (
     SELECT host, unnest(ls) AS raw,
       unnest(range(1, len(ls) + 1)) AS i

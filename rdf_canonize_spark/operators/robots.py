@@ -77,7 +77,12 @@ def parse_robots(df):
             "line_idx", "raw"
         ),
     )
-    clean = F.trim(F.regexp_replace(F.col("raw"), "#.*$", ""))
+    # CRLF files leave a CR on every line; drop it before the comment
+    # strip, whose class pattern means the same in Java and RE2 (the
+    # oracle twin) with no reliance on '.' or '$' semantics
+    clean = F.trim(F.regexp_replace(
+        F.translate(F.col("raw"), chr(13), ""), r"#[^\n]*", ""
+    ))
     has_colon = F.instr(clean, ":") > 0
     key = F.lower(F.trim(F.split_part(clean, F.lit(":"), F.lit(1))))
     value = F.trim(

@@ -82,8 +82,8 @@ CANONICAL_SCHEMA = StructType(
 # tests/test_pipeline_spark.py::test_lone_surrogate_input_hash_parity).
 # Canonicalization itself is NOT normalized: the rdfc core preserves
 # raw surrogates for byte-parity with the reference.
-_SEP = chr(31)
-_NULL = chr(0)
+_SEP = b"\x1f"  # chr(31)
+_NULL = b"\x00"  # chr(0)
 
 
 def _jvm_text(s):
@@ -107,7 +107,8 @@ def _jvm_text(s):
 
 def input_hash_of_rows(rows):
     """Order-independent content hash of a document's raw quad rows
-    (pre-dedup; duplicate rows collapse at digest level)."""
+    (pre-dedup; duplicate rows collapse at digest level).  Each value
+    is encoded once and framed as bytes."""
     digests = set()
     for row in rows:
         parts = []
@@ -115,11 +116,13 @@ def input_hash_of_rows(rows):
             if v is None:
                 parts.append(_NULL)
             else:
-                s = _jvm_text(str(v))
-                parts.append("%d:%s" % (len(s.encode("utf-8")), s))
-        digests.add(
-            hashlib.sha256(_SEP.join(parts).encode("utf-8")).hexdigest()
-        )
+                s = str(v)
+                try:
+                    b = s.encode("utf-8")
+                except UnicodeEncodeError:
+                    b = _jvm_text(s).encode("utf-8")
+                parts.append(b"%d:%b" % (len(b), b))
+        digests.add(hashlib.sha256(_SEP.join(parts)).hexdigest())
     return hashlib.sha256("".join(sorted(digests)).encode()).hexdigest()
 
 

@@ -1,9 +1,9 @@
 """Pure-Python RDFC-1.0 canonicalization core (no Spark dependency).
 
-This package is the kernel executed per document inside the Spark
-``groupBy('url').applyInPandas`` canonicalization stage, and is also
-usable standalone as a drop-in equivalent of the reference
-digitalbazaar/rdf-canonize API.
+This package is the per-document body of the Spark canonicalization
+stage, under both its ``mapInArrow`` and its ``grouped``
+(``applyInPandas``) boundary, and is also usable standalone as a
+drop-in equivalent of the reference digitalbazaar/rdf-canonize API.
 """
 
 from .api import canonize

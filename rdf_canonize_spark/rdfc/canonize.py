@@ -20,8 +20,9 @@ including its documented spec-deviation optimizations:
 All sorts that the reference performs with JS ``Array.sort()`` use
 UTF-16 code-unit order; all hash inputs are encoded like Node's utf8
 encoder (lone surrogates -> U+FFFD).  This module is pure Python with no
-Spark dependency -- it is the kernel executed per document inside the
-``groupBy('url').applyInPandas`` stage.
+Spark dependency -- it is the per-document body of the pipeline's
+canonicalization stage, under both its ``mapInArrow`` and its
+``grouped`` (``applyInPandas``) boundary.
 """
 
 from __future__ import annotations
@@ -151,6 +152,8 @@ class RDFC10:
         self.signal = signal
         self.quads = None
         self.deep_iterations_used = 0
+        self._related_edges = {}  # id -> [(related id, quad, position)]
+        self._related_hashes = {}  # related-hash message -> hex digest
 
     # 4.4) canonicalization algorithm (lib/RDFC10Sync.js:38-194)
     def main(self, dataset):
@@ -247,20 +250,29 @@ class RDFC10:
 
     # 4.7) hash related blank node (lib/RDFC10Sync.js:239-270).
     # Hash input framing is position ++ <predicate> ++ id with NO
-    # separators; update order must match exactly.
+    # separators.  The reference streams the three pieces through one
+    # digest; hashing them as one string gives the same bytes because
+    # every boundary has an ASCII character on one side, so no
+    # surrogate pair is split.  The same message recurs across
+    # permutations and recursions, so its digest is memoized per run.
     def hash_related_blank_node(self, related, quad, issuer, position):
-        md = self.create_message_digest()
-        md.update(position)
-        if position != "g":
-            md.update("<" + quad[1][1] + ">")
-        if self.canonical_issuer.has_id(related):
-            rid = "_:" + self.canonical_issuer.get_id(related)
-        elif issuer.has_id(related):
-            rid = "_:" + issuer.get_id(related)
-        else:
+        rid = self.canonical_issuer.existing.get(related)
+        if rid is None:
+            rid = issuer.existing.get(related)
+        if rid is None:
             rid = self.blank_node_info[related]["hash"]
-        md.update(rid)
-        return md.digest()
+        else:
+            rid = "_:" + rid
+        if position == "g":
+            msg = "g" + rid
+        else:
+            msg = position + "<" + quad[1][1] + ">" + rid
+        digest = self._related_hashes.get(msg)
+        if digest is None:
+            md = self.create_message_digest()
+            md.update(msg)
+            digest = self._related_hashes[msg] = md.digest()
+        return digest
 
     # 4.8) hash n-degree quads (lib/RDFC10Sync.js:273-412)
     def hash_n_degree_quads(self, bid, issuer):
@@ -380,16 +392,21 @@ class RDFC10:
         return _BLANK_A if component[1] == bid else _BLANK_Z
 
     def _create_hash_to_related(self, bid, issuer):
+        # the node's (related, quad, position) edges, in quad order then
+        # s, o, g, are the same on every recursion: gathered once per run
+        edges = self._related_edges.get(bid)
+        if edges is None:
+            edges = self._related_edges[bid] = [
+                (component[1], quad, position)
+                for quad in self.blank_node_info[bid]["quads"]
+                for component, position in (
+                    (quad[0], "s"), (quad[2], "o"), (quad[3], "g"))
+                if component[0] == BLANK and component[1] != bid
+            ]
         hash_to_related = {}
-        for quad in self.blank_node_info[bid]["quads"]:
-            s, p, o, g = quad
-            for component, position in ((s, "s"), (o, "o"), (g, "g")):
-                if component[0] == BLANK and component[1] != bid:
-                    related = component[1]
-                    h = self.hash_related_blank_node(
-                        related, quad, issuer, position
-                    )
-                    hash_to_related.setdefault(h, []).append(related)
+        for related, quad, position in edges:
+            h = self.hash_related_blank_node(related, quad, issuer, position)
+            hash_to_related.setdefault(h, []).append(related)
         return hash_to_related
 
     def _canonical_component(self, component):

@@ -15,12 +15,21 @@ from .terms import utf16_sort_key
 
 
 class Permuter:
-    __slots__ = ("current", "done", "direction")
+    __slots__ = ("current", "done", "direction", "keys")
 
     def __init__(self, lst):
-        lst.sort(key=utf16_sort_key)
         self.current = lst
         self.done = False
+        if len(lst) < 2:
+            # one permutation, nothing to order
+            self.direction = self.keys = None
+            return
+        # JS string comparison is UTF-16 code-unit order, and input
+        # labels may hold any character, so every comparison goes
+        # through the UTF-16 key; computed once per element here
+        # rather than on every step
+        self.keys = keys = {e: utf16_sort_key(e) for e in lst}
+        lst.sort(key=keys.__getitem__)
         # direction keyed by element VALUE (duplicates share an entry),
         # True = looking left
         self.direction = {e: True for e in lst}
@@ -29,12 +38,13 @@ class Permuter:
         return not self.done
 
     def next(self):
-        current, direction = self.current, self.direction
+        current, direction, keys = self.current, self.direction, self.keys
         rval = list(current)
+        if keys is None:
+            self.done = True
+            return rval
 
-        # find largest mobile element k (JS string > = UTF-16 order; ids
-        # here are always ASCII so plain compare would match, but use the
-        # same key for safety)
+        # find largest mobile element k
         k = None
         k_key = None
         pos = 0
@@ -42,12 +52,11 @@ class Permuter:
         for i in range(length):
             element = current[i]
             left = direction[element]
-            e_key = utf16_sort_key(element)
+            e_key = keys[element]
             if (k is None or e_key > k_key) and (
-                (left and i > 0
-                 and e_key > utf16_sort_key(current[i - 1]))
+                (left and i > 0 and e_key > keys[current[i - 1]])
                 or (not left and i < length - 1
-                    and e_key > utf16_sort_key(current[i + 1]))
+                    and e_key > keys[current[i + 1]])
             ):
                 k = element
                 k_key = e_key
@@ -59,6 +68,6 @@ class Permuter:
             current[pos] = current[swap]
             current[swap] = k
             for element in current:
-                if utf16_sort_key(element) > k_key:
+                if keys[element] > k_key:
                     direction[element] = not direction[element]
         return rval

@@ -592,6 +592,25 @@ def test_robots_parse_and_gate_planted(spark):
     assert gate_bot[3] is False  # Disallow: / blocks everything on h1
     assert gate_bot[5] is True
 
+    # CRLF line ends parse like LF ones, trailing comment included
+    crlf = spark.createDataFrame(
+        [("h2.example.com",
+          "User-agent: *\r\nDisallow: /private # secret\r\n")],
+        "host string, robots_txt string",
+    )
+    crlf_rules = parse_robots(crlf)
+    assert [(r["agent"], r["rule"], r["path"])
+            for r in crlf_rules.collect()] == [("*", "disallow", "/private")]
+    crlf_urls = spark.createDataFrame(
+        [(1, "https://h2.example.com/private/x"),
+         (2, "https://h2.example.com/public")],
+        "doc_id long, url string",
+    )
+    assert {
+        r["doc_id"]: r["allowed"]
+        for r in robots_gate(crlf_urls, crlf_rules).collect()
+    } == {1: False, 2: True}
+
 
 def test_quality_threshold_matches_python_mirror(spark):
     """The per-language cutoff equals an exact Python recomputation
